@@ -23,6 +23,7 @@ import json
 import os
 import time as _time
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,7 +50,7 @@ Smt = Callable[[DataFrame], DataFrame]
 
 
 def split_open_tail_tx(
-    env: DataFrame, probe: dict | None = None
+    env: DataFrame, probe: dict
 ) -> tuple[DataFrame | None, DataFrame | None, int | None]:
     """Transaction-aligned batch segmentation (reference: whole transactions
     are assembled before apply, ``sink/replay/transaction/
@@ -69,25 +70,10 @@ def split_open_tail_tx(
     boundary (None if the whole batch is one open transaction), ``deferred``
     = the open tail run (None if nothing defers).
 
-    ``probe`` (optional) carries the answers precomputed by the caller's
-    fused per-batch aggregation (``{"p", "tt", "boundary"}`` — see
-    ``CdcEngine.replay``), making this a zero-job pure plan transform; when
-    absent, two narrow driver aggregations compute them here."""
-    if probe is not None:
-        p, tail_tx, boundary = probe["p"], probe["tt"], probe["boundary"]
-    else:
-        agg = env.select(
-            F.max("source.pos").alias("p"),
-            F.max_by(F.col("transaction.id"), F.col("source.pos")).alias("tt"),
-        ).first()
-        p, tail_tx = agg["p"], agg["tt"]
-        boundary = (
-            env.filter(~F.col("transaction.id").eqNullSafe(F.lit(tail_tx)))
-            .select(F.max("source.pos"))
-            .first()[0]
-            if p is not None and tail_tx is not None
-            else None
-        )
+    ``probe`` holds the answers of the batch's one fused aggregation
+    (``{"p", "tt", "boundary"}``, see ``TxCarry.split``), so this is a
+    zero-job pure plan transform."""
+    p, tail_tx, boundary = probe["p"], probe["tt"], probe["boundary"]
     if p is None or tail_tx is None:
         return env, None, None
     if boundary is None:
@@ -102,31 +88,26 @@ def split_open_tail_tx(
     return closed, deferred, boundary
 
 
-def fused_tail_probe(
-    env: DataFrame, flags: dict | None = None, with_file: bool = False
-) -> dict:
+def fused_tail_probe(env: DataFrame, flags: dict) -> dict:
     """ONE driver job answering the tail-transaction questions for a batch:
-    ``{"p": max pos, "tt": tail tx id, "pmin": tail run start, "ng": number
+    ``{"p": max pos, "f": max file, "tt": tail tx id, "pmin": tail run
+    start, "ng": number
     of tx groups holding real offsets, "ngrp": total tx groups (>0 ⇔ the
     batch has rows, even if every offset is null), "n": total row count
     (feeds the progress committer's extract/skip counters)}``. Per-tx partial
     aggregate (tiny shuffle: one row per transaction) + global fold — THE
-    per-batch probe, shared by ``CdcEngine.replay`` and
-    ``MultiTableEngine``.
+    per-batch probe of every driver (``TxCarry.probe``).
 
-    ``flags``: optional named boolean columns (e.g. barrier presence,
-    malformed-row presence) folded into the SAME job — each yields a global
-    max under its name plus the tail group's own value under
-    ``tail_<name>`` (the deferred run's flags feed the carry meta).
-    ``with_file=True`` adds the global max source file as ``f``."""
-    flags = flags or {}
+    ``flags``: named boolean columns (e.g. barrier presence, malformed-row
+    presence) folded into the SAME job — each yields a global max under its
+    name plus the tail group's own value under ``tail_<name>`` (the
+    deferred run's flags feed the carry meta)."""
     aggs = [
         F.max("source.pos").alias("p"),
         F.min("source.pos").alias("pmin"),
         F.count(F.lit(1)).alias("nrows"),
+        F.max("source.file").alias("f"),
     ]
-    if with_file:
-        aggs.append(F.max("source.file").alias("f"))
     for name, c in flags.items():
         aggs.append(F.max(c.cast("int")).alias(name))
     per_tx = env.groupBy(F.col("transaction.id").alias("_tx")).agg(*aggs)
@@ -142,15 +123,15 @@ def fused_tail_probe(
         F.count(F.when(F.col("p").isNotNull(), 1)).alias("ng"),
         F.count(F.lit(1)).alias("ngrp"),
         F.sum("nrows").alias("n"),
+        F.max("f").alias("f"),
     ]
-    if with_file:
-        sel.append(F.max("f").alias("f"))
     for name in flags:
         sel.append(F.max(name).alias(name))
     row = per_tx.select(*sel).first()
     tail = row["tail"]
     out = {
         "p": row["p"],
+        "f": row["f"],
         "tt": tail["tx"] if tail is not None else None,
         "pmin": tail["pmin"] if tail is not None else None,
         "ng": row["ng"],
@@ -160,18 +141,16 @@ def fused_tail_probe(
         # deferred-row figure when the tail is carried to the next batch
         "tail_n": (tail["nrows"] or 0) if tail is not None else 0,
     }
-    if with_file:
-        out["f"] = row["f"]
     for name in flags:
         out[name] = row[name]
         out[f"tail_{name}"] = tail[name] if tail is not None else None
     return out
 
 
-def derive_tx_boundary(probe: dict, carry_meta: dict | None, had_carry: bool) -> int | None:
+def derive_tx_boundary(probe: dict, carry_meta: dict | None) -> int | None:
     """Tail-run boundary from a batch's ``fused_tail_probe`` facts + the
-    carried transaction's meta (transactions are contiguous pos runs and
-    every carry pos < every batch pos — see ``CdcEngine.replay``):
+    carried transaction's meta (None = nothing carried; transactions are
+    contiguous pos runs and every carry pos < every batch pos):
     other positioned groups in the batch → the tail run starts at its own
     pmin; batch all-one-tx over a DIFFERENT carried tx → the new tx proves
     the carried one closed at its max pos; same tx (or no carry) → still
@@ -180,9 +159,15 @@ def derive_tx_boundary(probe: dict, carry_meta: dict | None, had_carry: bool) ->
         return None
     if probe["ng"] > 1:
         return probe["pmin"] - 1
-    if had_carry and carry_meta is not None and carry_meta["tx"] != probe["tt"]:
+    if carry_meta is not None and carry_meta["tx"] != probe["tt"]:
         return carry_meta["p"]
     return None
+
+
+#: the carry meta file inside each ``_tx_carry/vN`` dir (underscore-prefixed
+#: files are invisible to the parquet reader) and the keys it must hold
+CARRY_META = "_carry_meta.json"
+CARRY_META_KEYS = ("tx", "p", "f", "nd", "nb")
 
 
 def _carry_versions(root: str) -> list[tuple[int, str]]:
@@ -222,13 +207,11 @@ def persist_tx_carry(
     recovery point is the PRE-epoch carry). ``None`` clears everything.
     Returns the re-read (flat-scan) DataFrame.
 
-    ``meta`` (optional): the carry's fused-probe facts ``{"tx", "p", "nd",
-    "nb"}`` — its transaction id, max pos, and barrier/bad flags — written
-    as ``_carry_meta.json`` inside the version dir (underscore-prefixed
-    files are invisible to the parquet reader). They let the NEXT batch's
-    split stay a zero-job plan transform (see ``CdcEngine.replay``); a
-    carry without meta is handled by the probing fallback."""
-    import json as _json
+    ``meta`` (required with a carry): the carry's fused-probe facts
+    ``{"tx", "p", "f", "nd", "nb"}`` — its transaction id, max offset, and
+    barrier/malformed-row flags — written atomically (temp file +
+    ``os.replace``) as ``_carry_meta.json`` inside the version dir. They let
+    the next batch's split and the flush run without probing the carry."""
     import shutil
 
     versions = _carry_versions(root)
@@ -236,12 +219,15 @@ def persist_tx_carry(
         for _, p in versions:
             shutil.rmtree(p, ignore_errors=True)
         return None
+    if meta is None:
+        raise ValueError("a persisted carry needs its meta")
     nxt = (versions[-1][0] + 1) if versions else 1
     d = os.path.join(root, "_tx_carry", f"v{nxt}")
     carry.write.mode("overwrite").parquet(d)  # reads vN while writing vN+1
-    if meta is not None:
-        with open(os.path.join(d, "_carry_meta.json"), "w") as f:
-            _json.dump(meta, f)
+    tmp = os.path.join(d, CARRY_META + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    os.replace(tmp, os.path.join(d, CARRY_META))
     for _, p in versions:
         shutil.rmtree(p, ignore_errors=True)
     return spark.read.parquet(d)
@@ -256,18 +242,139 @@ def load_tx_carry(spark: SparkSession, root: str) -> DataFrame | None:
 
 
 def load_tx_carry_meta(root: str) -> dict | None:
-    """The persisted carry's fused-probe facts (see ``persist_tx_carry``),
-    or None for a missing/legacy carry."""
-    import json as _json
-
+    """The persisted carry's meta (see ``persist_tx_carry``), or None when
+    there is no carry or its meta is missing, torn or incomplete — a crash
+    between the parquet write and the meta rename (``TxCarry.held`` then
+    recomputes it)."""
     versions = _carry_versions(root)
     if not versions:
         return None
-    path = os.path.join(versions[-1][1], "_carry_meta.json")
-    if not os.path.exists(path):
+    try:
+        with open(os.path.join(versions[-1][1], CARRY_META)) as f:
+            meta = json.load(f)
+    except (OSError, ValueError):
         return None
-    with open(path) as f:
-        return _json.load(f)
+    return meta if all(k in meta for k in CARRY_META_KEYS) else None
+
+
+class CarrySplit(NamedTuple):
+    """One batch after ``TxCarry.split``: what commits now, under which
+    fence and flags, and the carry that replaces the old one once it has."""
+
+    closed: DataFrame | None  # None: the whole union is one open transaction
+    fence: tuple[str, int]
+    has_ddl: bool
+    has_bad: bool
+    drained: bool  # the previous carry was prepended to ``closed``
+    carry: DataFrame | None  # the newly deferred tail run
+    meta: dict | None
+
+
+class TxCarry:
+    """The open-tail-transaction carry of one root: the one implementation
+    behind ``CdcEngine.replay``/``apply_stream_batch``/``flush_tx_carry``
+    and ``MultiTableEngine.apply_wire_batch``/``flush_tx_carry``.
+
+    Per batch a driver calls ``probe`` (THE one job), ``split`` (zero
+    jobs: prepend the carry, defer the batch's open tail), commits
+    ``closed``, then ``commit`` (persist the new carry AFTER the commit);
+    a flush is ``take`` + apply + ``clear``. The carry lives in memory and
+    under ``<root>/_tx_carry/vN`` with its meta, so every driver resumes
+    every other driver's carry with the same one probe per batch.
+
+    ``key_cols``: the table key the malformed-row flag ``nb`` checks; None
+    (the mixed-table wire form has no single key) records ``nb`` as True,
+    i.e. unknown."""
+
+    def __init__(
+        self, spark: SparkSession, root: str, key_cols: list[str] | None = None
+    ) -> None:
+        self.spark = spark
+        self.root = root
+        self.key_cols = key_cols
+        self.df: DataFrame | None = None
+        self.meta: dict | None = None
+
+    def probe(self, env: DataFrame) -> dict:
+        """The batch's one fused job: offsets, tail transaction, flags."""
+        nb = (
+            _reason_col(env, self.key_cols).isNotNull()
+            if self.key_cols is not None else F.lit(True)
+        )
+        return fused_tail_probe(
+            env, flags={"nd": F.col("op").isin(BARRIER_OPS), "nb": nb}
+        )
+
+    def held(self) -> bool:
+        """Whether a carry is pending — reloaded from disk after a restart.
+        A carry whose meta a crash lost gets it recomputed here, once."""
+        if self.df is None:
+            self.df = load_tx_carry(self.spark, self.root)
+            self.meta = None
+            if self.df is not None:
+                self.meta = load_tx_carry_meta(self.root)
+                if self.meta is None:
+                    mm = self.probe(self.df)
+                    self.meta = {"tx": mm["tt"], "p": mm["p"], "f": mm["f"],
+                                 "nd": bool(mm["nd"]), "nb": bool(mm["nb"])}
+        return self.df is not None
+
+    def split(self, env: DataFrame, mm: dict, defer: bool = True) -> CarrySplit:
+        """Prepend the carry to a batch whose ``probe`` is ``mm`` (with a
+        non-null offset) and, when ``defer``, split off its open tail run —
+        a zero-job plan transform. The union's flags are the batch's OR the
+        carry's (True over-approximates: one empty control-plane pass).
+        A whole-open union commits nothing, so it is persisted here."""
+        had = self.held()
+        cm = self.meta
+        if had:
+            env = self.df.unionByName(env)
+        nd = bool(mm["nd"] or (had and cm["nd"]))
+        nb = bool(mm["nb"] or (had and cm["nb"]))
+        closed, carry, boundary = env, None, None
+        if defer:
+            closed, carry, boundary = split_open_tail_tx(
+                env, {"p": mm["p"], "tt": mm["tt"],
+                      "boundary": derive_tx_boundary(mm, cm)},
+            )
+        meta = None
+        if carry is not None:
+            # the deferred run is the batch's tail group (+ the old carry
+            # when the same transaction straddles); whole-union deferral
+            # takes the global flags
+            t = "" if closed is None else "tail_"
+            same = had and (closed is None or cm["tx"] == mm["tt"])
+            meta = {"tx": mm["tt"], "p": mm["p"], "f": mm["f"],
+                    "nd": bool(mm[t + "nd"] or (same and cm["nd"])),
+                    "nb": bool(mm[t + "nb"] or (same and cm["nb"]))}
+        fence = (mm["f"], boundary if carry is not None else mm["p"])
+        s = CarrySplit(closed, fence, nd, nb, had, carry, meta)
+        if closed is None:
+            self.commit(s)
+        return s
+
+    def commit(self, s: CarrySplit) -> None:
+        """After ``s.closed`` committed: materialize the new carry, or clear
+        the drained one. Never before the commit — the closed plan lazily
+        reads the previous carry version, and a crash mid-batch must resume
+        from the PRE-batch carry (a stale carry left on disk would re-merge
+        old events over newer table state)."""
+        if s.drained or s.carry is not None:
+            self.df = persist_tx_carry(self.spark, s.carry, self.root, meta=s.meta)
+            self.meta = s.meta
+
+    def take(self) -> tuple[DataFrame | None, dict | None]:
+        """The carry and its meta for a flush; the disk copy stays until
+        ``clear`` (a crash mid-flush reloads it)."""
+        if not self.held():
+            return None, None
+        out = (self.df, self.meta)
+        self.df = self.meta = None
+        return out
+
+    def clear(self) -> None:
+        self.df = self.meta = None
+        persist_tx_carry(self.spark, None, self.root)
 
 
 class CdcEngine:
@@ -329,11 +436,8 @@ class CdcEngine:
         #: the per-version lineage with it. None (default) keeps every
         #: version for time travel; long-running streams should set it.
         self.expire_keep = expire_keep
-        #: open-tail-transaction rows deferred across replay calls
-        self._tx_carry: DataFrame | None = None
-        #: fused-probe facts about _tx_carry ({"tx","p","nd","nb"}) — lets
-        #: the replay loop split carry-prefixed batches with zero extra jobs
-        self._carry_meta: dict | None = None
+        #: open-tail-transaction rows deferred across batches and calls
+        self._carry = TxCarry(spark, table.root, table.key_cols)
         if not table.exists():
             table.create(REPO_PAYLOAD_SCHEMA)
 
@@ -1000,10 +1104,12 @@ class CdcEngine:
         crash-resume recomputes the identical segmentation and the
         fence-check keeps everything idempotent. After the last batch the
         remaining carry is flushed (end of log closes the transaction).
-        Zero extra cost for streams without transaction metadata (the probe
-        rides the existing fused aggregation).
+        Every batch costs ONE probe job, carry-prefixed or not: the split
+        reads the carry's persisted meta, never the carry itself.
 
-        The carry lives on the engine across ``replay`` calls; only the
+        The carry (``TxCarry``) lives on the engine and under the table
+        root, so it survives ``replay`` calls and restarts, and a carry that
+        ``apply_stream_batch`` deferred resumes here unchanged. Only the
         CALLER knows whether the log is complete. One-shot replays of a
         finished log (the default, ``final=True``) flush the last open
         transaction at the end — a binlog only contains committed
@@ -1015,41 +1121,25 @@ class CdcEngine:
         re-carried duplicate rows collapse in the merge's last-wins
         dedupe)."""
         versions = []
-        # open-tail tx awaiting its END — reload from disk after a restart,
-        # together with its fused-probe meta (tx id, max pos, flags)
-        carry: DataFrame | None = self._tx_carry
-        cm: dict | None = self._carry_meta
-        if carry is None:
-            carry = load_tx_carry(self.spark, self.table.root)
-            cm = load_tx_carry_meta(self.table.root) if carry is not None else None
-        if not tx_aligned and carry is not None:
+        carry = self._carry
+        if not tx_aligned and carry.held():
             # a previously deferred transaction predates every batch here
             # (ordered log) — flush it FIRST: applying the new batches would
             # advance the fence past the carry's offsets and the end-of-loop
             # flush would then fence-skip it into oblivion (review r4: the
             # carried transaction's rows were permanently lost)
-            self._tx_carry, self._carry_meta = carry, cm
             v = self.flush_tx_carry()
             if v is not None:
                 versions.append(v)
-            carry, cm = None, None
         paths = list_batches(batch_dir)
         for i, path in enumerate(paths):
-            is_final_batch = final and i == len(paths) - 1
             env = read_batch(self.spark, path)
             # ONE narrow-column pass answers every per-batch probe: offset
             # fence, DDL presence, malformed-row presence, tail-transaction
             # id AND the tail-transaction boundary (per-batch serial driver
             # time is the scaling bottleneck, so everything rides this
-            # single job — fused_tail_probe, shared with MultiTableEngine).
-            mm = fused_tail_probe(
-                env,
-                flags={
-                    "nd": F.col("op").isin(BARRIER_OPS),
-                    "nb": _reason_col(env, self.table.key_cols).isNotNull(),
-                },
-                with_file=True,
-            )
+            # single job)
+            mm = carry.probe(env)
             cur = self.table.fence()
             if mm["p"] is None or mm["f"] is None:
                 # no fully-positioned row in the whole batch (null pos, or
@@ -1070,7 +1160,7 @@ class CdcEngine:
                         )
                 continue
             if (
-                carry is None
+                not carry.held()
                 and cur is not None
                 and offset_key(mm["f"], mm["p"]) <= offset_key(*cur)
             ):
@@ -1081,92 +1171,31 @@ class CdcEngine:
                         extracted=mm["n"], success=0, skipped=mm["n"]
                     )
                 continue
-            fence = (mm["f"], mm["p"])
-            has_ddl: bool | None = bool(mm["nd"])
-            # the fused probe sees pre-SMT rows; with SMTs installed a
-            # transform could corrupt a row, so fall back to the
-            # post-SMT probe in that case
-            has_bad: bool | None = bool(mm["nb"]) if not self.smt_chain else None
-            tail_tx = mm["tt"]
-            had_carry = carry is not None
-            tx_engaged = tx_aligned and (had_carry or tail_tx is not None)
-            if tx_engaged:
-                fused = not had_carry or cm is not None  # legacy carry: probe
-                if had_carry:
-                    env = carry.unionByName(env)
-                    # the union's flags = this batch's OR the carry's (the
-                    # carry meta recorded its own); True is a safe over-
-                    # approximation (costs one empty control-plane pass),
-                    # False is exact. A meta-less legacy carry → re-probe.
-                    if fused:
-                        has_ddl = bool(mm["nd"]) or bool(cm["nd"])
-                        has_bad = (
-                            (bool(mm["nb"]) or bool(cm["nb"]))
-                            if not self.smt_chain else None
-                        )
-                    else:
-                        has_ddl = None
-                        has_bad = None
-                if is_final_batch:
-                    # log complete: the last batch's tail transaction is
-                    # closed by end-of-log — commit it in THIS batch (no
-                    # separate flush commit; disk carry clears after the
-                    # apply below, which still lazily reads it)
-                    carry, cm = None, None
-                else:
-                    # zero-job split: the fused probe already knows the tail
-                    # tx and its run start; boundary cases live in ONE place
-                    # (derive_tx_boundary, shared with MultiTableEngine)
-                    probe = None
-                    if fused:
-                        probe = {
-                            "p": mm["p"], "tt": tail_tx,
-                            "boundary": derive_tx_boundary(mm, cm, had_carry),
-                        }
-                    closed, carry, boundary = split_open_tail_tx(env, probe=probe)
-                    whole_open = closed is None
-                    if carry is not None and fused:
-                        # meta for the NEW carry: the deferred run is the
-                        # batch's tail group (+ the old carry when the same
-                        # tx straddles); whole-union deferral folds the
-                        # global flags in
-                        nd_c = bool(mm["nd"] if whole_open else mm["tail_nd"])
-                        nb_c = bool(mm["nb"] if whole_open else mm["tail_nb"])
-                        if had_carry and (whole_open or cm["tx"] == tail_tx):
-                            nd_c = nd_c or bool(cm["nd"])
-                            nb_c = nb_c or bool(cm["nb"])
-                        cm = {"tx": tail_tx, "p": mm["p"], "nd": nd_c, "nb": nb_c}
-                    elif carry is not None:
-                        cm = None  # legacy carry stays legacy until flushed
-                    else:
-                        cm = None
-                    if whole_open:
-                        # whole batch = one still-open transaction; nothing
-                        # commits, so materialize the carry immediately
-                        carry = persist_tx_carry(
-                            self.spark, carry, self.table.root, meta=cm
-                        )
-                        if self.committer:
-                            # extracted but deferred whole: parked rows
-                            # surface as the reference's `rest` (in-pipe)
-                            self.committer.record_sink_batch(
-                                extracted=mm["n"], success=0,
-                                deferred=mm["n"],
-                            )
-                        continue
-                    env = closed
-                    if carry is not None:
-                        fence = (mm["f"], boundary)
+            # log complete (final): the last batch's tail transaction is
+            # closed by end-of-log — commit it in THIS batch, no flush
+            s = carry.split(
+                env, mm, defer=tx_aligned and not (final and i == len(paths) - 1)
+            )
+            if s.closed is None:
+                if self.committer:
+                    # extracted but deferred whole: parked rows surface as
+                    # the reference's `rest` (in-pipe)
+                    self.committer.record_sink_batch(
+                        extracted=mm["n"], success=0, deferred=mm["n"],
+                    )
+                continue
             v_before = (
                 self.table.manifest()["version"] if self.committer else 0
             )
             t0 = _time.time()
             v = self.apply_envelope_batch(
-                env,
+                s.closed,
                 batch_id=f"batch_{i:05d}",
-                fence=fence,
-                has_ddl=has_ddl,
-                has_bad=has_bad,
+                fence=s.fence,
+                has_ddl=s.has_ddl,
+                # the fused probe sees pre-SMT rows; with SMTs installed a
+                # transform could corrupt a row, so the engine re-probes
+                has_bad=s.has_bad if not self.smt_chain else None,
             )
             if self.committer:
                 # extracted = THIS file's rows; a deferred tail parks
@@ -1176,31 +1205,17 @@ class CdcEngine:
                     extracted=mm["n"],
                     success=self._lineage_events_since(v_before),
                     failed=self._quarantine_rows(f"batch_{i:05d}", since=t0),
-                    deferred=(
-                        mm["tail_n"]
-                        if tx_engaged and carry is not None
-                        else 0
-                    ),
+                    deferred=mm["tail_n"] if s.carry is not None else 0,
                     # a closed batch prepends the WHOLE persisted carry, so
                     # the parked pool drains here — explicit, not inferred
                     # from the residual (final review r5: the inference
                     # confounded carry-drain with last-wins collapse)
-                    drained_carry=tx_engaged and had_carry,
+                    drained_carry=s.drained,
                 )
-            if tx_engaged:
-                # materialize AFTER the closed part committed: the closed
-                # plan lazily reads the previous carry version, and a crash
-                # mid-batch must resume from the PRE-batch carry (lineage
-                # truncation + crash recovery; see persist_tx_carry). A
-                # carry that went back to None must CLEAR the disk version
-                # — a stale persisted carry would re-merge old events over
-                # newer table state on restart.
-                carry = persist_tx_carry(self.spark, carry, self.table.root, meta=cm)
+            carry.commit(s)
             if v is not None:
                 versions.append(v)
-        self._tx_carry = carry
-        self._carry_meta = cm if carry is not None else None
-        if final and carry is not None:
+        if final and carry.held():
             # only reachable when the directory was empty or every batch
             # was skipped — flush whatever was carried in from before
             v = self.flush_tx_carry()
@@ -1235,9 +1250,7 @@ class CdcEngine:
                 extracted=success + failed, success=success, failed=failed
             )
 
-    def apply_stream_batch(
-        self, env: DataFrame, batch_id: str, tx_aligned: bool = True
-    ) -> int | None:
+    def apply_stream_batch(self, env: DataFrame, batch_id: str) -> int | None:
         """One streaming micro-batch (foreachBatch epoch) with the same
         transaction alignment as ``replay``: the epoch's open tail
         transaction defers (persisted carry — a checkpoint will not
@@ -1245,84 +1258,48 @@ class CdcEngine:
         ``flush_tx_carry`` at end of stream."""
         v_before = self.table.manifest()["version"] if self.committer else 0
         t0 = _time.time()
-        if not tx_aligned:
+        mm = self._carry.probe(env)
+        if mm["p"] is None or mm["f"] is None:
+            # no positioned row to split against: the carry waits for the
+            # next epoch, and the engine's own probe quarantines poison rows
             v = self.apply_envelope_batch(env, batch_id=batch_id)
             self._report_apply(v_before, batch_id, since=t0)
             return v
-        carry = self._tx_carry
-        if carry is None:
-            carry = load_tx_carry(self.spark, self.table.root)
-        had_carry = carry is not None
-        if had_carry:
-            env = carry.unionByName(env)
-        # ONE fused probe per epoch (same job the replay loop runs): fence
-        # offsets, tail-transaction id + run start, barrier/malformed flags.
-        # Previously the stream path paid 4 separate narrow jobs per epoch —
-        # the split's two aggregations plus apply_envelope_batch's fence and
-        # has_bad/has_ddl probes; at 4M-event epochs each is a full-batch
-        # column scan. The carry (if any) is already unioned in, so the
-        # no-carry boundary derivation applies.
-        mm = fused_tail_probe(
-            env,
-            flags={
-                "nd": F.col("op").isin(BARRIER_OPS),
-                "nb": _reason_col(env, self.table.key_cols).isNotNull(),
-            },
-            with_file=True,
-        )
-        self._carry_meta = None  # stream-path carries have no fused meta
-        boundary = derive_tx_boundary(mm, None, False)
-        closed, carry, boundary = split_open_tail_tx(
-            env, probe={"p": mm["p"], "tt": mm["tt"], "boundary": boundary}
-        )
-        engaged = had_carry or carry is not None
-        if closed is None:
-            self._tx_carry = persist_tx_carry(self.spark, carry, self.table.root)
+        s = self._carry.split(env, mm)
+        if s.closed is None:
             return None
-        kwargs = {}
-        if mm["p"] is not None and mm["f"] is not None:
-            # the closed part's fence: the tail-run boundary when a tail
-            # defers, else the epoch max — in the epoch's max file, exactly
-            # as the replay loop fences a deferred tail
-            kwargs["fence"] = (
-                mm["f"], boundary if carry is not None else mm["p"]
-            )
         v = self.apply_envelope_batch(
-            closed,
+            s.closed,
             batch_id=batch_id,
-            has_ddl=bool(mm["nd"]),
+            fence=s.fence,
+            has_ddl=s.has_ddl,
             # pre-SMT probe: with SMTs installed a transform could corrupt
             # a row after the probe — fall back to the post-SMT probe then
-            has_bad=(bool(mm["nb"]) if not self.smt_chain else None),
-            **kwargs,
+            has_bad=s.has_bad if not self.smt_chain else None,
         )
         self._report_apply(v_before, batch_id, since=t0)
-        if engaged:
-            carry = persist_tx_carry(self.spark, carry, self.table.root)
-        self._tx_carry = carry
+        self._carry.commit(s)
         return v
 
     def flush_tx_carry(self, batch_id: str = "batch_txflush") -> int | None:
         """Apply the deferred open-tail transaction — call when the log is
         known complete (a binlog only ever contains committed transactions,
-        so end-of-log closes it). No-op if nothing is carried."""
-        carry, self._tx_carry = self._tx_carry, None
-        self._carry_meta = None
+        so end-of-log closes it). No-op if nothing is carried. The fence
+        and flags come from the carry meta: no probe job."""
+        carry, meta = self._carry.take()
         if carry is None:
-            carry = load_tx_carry(self.spark, self.table.root)
-        if carry is None:
-            return None
-        mm = carry.select(
-            F.max("source.pos").alias("p"), F.max("source.file").alias("f")
-        ).first()
-        if mm["p"] is None:
-            persist_tx_carry(self.spark, None, self.table.root)
             return None
         v_before = self.table.manifest()["version"] if self.committer else 0
         t0 = _time.time()
-        v = self.apply_envelope_batch(carry, batch_id=batch_id, fence=(mm["f"], mm["p"]))
+        v = self.apply_envelope_batch(
+            carry,
+            batch_id=batch_id,
+            fence=(meta["f"], meta["p"]),
+            has_ddl=meta["nd"],
+            has_bad=meta["nb"] if not self.smt_chain else None,
+        )
         self._report_apply(v_before, batch_id, flush=True, since=t0)
         if self.committer:
             self.committer.commit(force=True)  # end-of-stream terminal line
-        persist_tx_carry(self.spark, None, self.table.root)
+        self._carry.clear()
         return v

@@ -38,7 +38,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from debezium_spark.plans.table import LakeTable
 from debezium_spark.schema import SOURCE_SCHEMA, TRANSACTION_SCHEMA, offset_key
-from debezium_spark.streaming.engine import CdcEngine
+from debezium_spark.streaming.engine import CdcEngine, TxCarry
 
 #: wire-format envelope: payloads as JSON strings (per-table schemas are
 #: applied at parse time, one from_json per registered table)
@@ -190,10 +190,8 @@ class MultiTableEngine:
         self.default_mode = default_mode
         self.tx_aligned = tx_aligned
         self.committer = committer
-        self._tx_carry: DataFrame | None = None
-        #: fused-probe facts about _tx_carry (tx id + max pos) — lets the
-        #: dispatcher split carry-prefixed batches with one probe job
-        self._carry_meta: dict | None = None
+        #: open-tail-transaction wire rows deferred across batches
+        self._carry = TxCarry(spark, self.root)
         self.salt_factor = salt_factor
         self.compact_depth = compact_depth
         #: fold the catalog ledger into one checkpoint line once it exceeds
@@ -729,61 +727,29 @@ class MultiTableEngine:
         then each registered table parses + merges only its rows. Tables
         with no rows in the batch get an offset-bearing heartbeat at the
         global max so idle fences advance (Heartbeat.java:27-79).
-        Unregistered tables are dropped (include-list semantics)."""
-        tx_engaged = False
-        if self.tx_aligned:
-            from debezium_spark.streaming.engine import (
-                derive_tx_boundary,
-                fused_tail_probe,
-                load_tx_carry,
-                load_tx_carry_meta,
-                persist_tx_carry,
-                split_open_tail_tx,
-            )
+        Unregistered tables are dropped (include-list semantics). With
+        ``tx_aligned`` the batch's open tail transaction first defers to
+        the carry (``engine.TxCarry``)."""
+        if not self.tx_aligned:
+            return self._dispatch(wire, batch_id)
+        # ONE probe job on the incoming batch; the carry's facts ride its
+        # persisted meta (restart recovery: a streaming checkpoint will not
+        # redeliver the epoch whose tail was deferred)
+        mm = self._carry.probe(wire)
+        if mm["p"] is None or mm["f"] is None:
+            # no positioned row to split against: the carry waits, and the
+            # per-table engines quarantine poison rows
+            return self._dispatch(wire, batch_id)
+        s = self._carry.split(wire, mm)
+        if s.closed is None:
+            return {}
+        versions = self._dispatch(s.closed, batch_id)
+        self._carry.commit(s)
+        return versions
 
-            if self._tx_carry is None:
-                # restart recovery: a streaming checkpoint will not
-                # redeliver the epoch whose tail we deferred
-                self._tx_carry = load_tx_carry(self.spark, self.root)
-                self._carry_meta = (
-                    load_tx_carry_meta(self.root) if self._tx_carry is not None else None
-                )
-            had_carry = self._tx_carry is not None
-            # ONE probe job on the incoming batch (carry facts ride its
-            # persisted meta), instead of two aggregations over the union
-            bp = fused_tail_probe(wire)
-            if had_carry:
-                wire = self._tx_carry.unionByName(wire)
-            cm = self._carry_meta
-            probe = None
-            if (not had_carry or cm is not None) and bp["p"] is not None:
-                probe = {
-                    "p": bp["p"], "tt": bp["tt"],
-                    "boundary": derive_tx_boundary(bp, cm, had_carry),
-                }
-            elif not had_carry:
-                probe = {"p": bp["p"], "tt": bp["tt"], "boundary": None}
-            closed, carry, _ = split_open_tail_tx(wire, probe=probe)
-            if (carry is not None and bp["p"] is not None
-                    and (not had_carry or cm is not None)):
-                # nd/nb are conservative placeholders: the multi pre-pass
-                # re-derives per-table flags from the dispatched part, so
-                # only tx/p are consumed here
-                self._carry_meta = {"tx": bp["tt"], "p": bp["p"],
-                                    "nd": True, "nb": True}
-            else:
-                # empty batch or legacy (meta-less) carry: keep what we had
-                self._carry_meta = None if carry is None else cm
-            tx_engaged = had_carry or carry is not None
-            if closed is None:
-                # whole batch = one still-open transaction: nothing
-                # dispatches, materialize the carry now
-                self._tx_carry = persist_tx_carry(
-                    self.spark, carry, self.root, meta=self._carry_meta
-                )
-                return {}
-            self._tx_carry = carry  # materialized AFTER dispatch below
-            wire = closed
+    def _dispatch(self, wire: DataFrame, batch_id: str) -> dict[str, int | None]:
+        """Fan a (closed) wire batch out to the per-table engines — no
+        transaction split."""
         wire = wire.persist()
         try:
             stats = self._prepass_stats(wire).collect()
@@ -1036,16 +1002,6 @@ class MultiTableEngine:
             for key in pending_drops:
                 self._catalog_append({"op": "drop", "db": key[0], "table": key[1]})
                 self._retire(key)
-            if tx_engaged:
-                # materialize AFTER the per-table commits (the dispatched
-                # plans lazily read the previous carry version; a crash
-                # mid-epoch must resume from the PRE-epoch carry); a
-                # carry gone back to None clears the disk version
-                from debezium_spark.streaming.engine import persist_tx_carry
-
-                self._tx_carry = persist_tx_carry(
-                    self.spark, self._tx_carry, self.root, meta=self._carry_meta
-                )
             if (
                 self.catalog_compact_threshold
                 and self._catalog_lines > self.catalog_compact_threshold
@@ -1067,23 +1023,13 @@ class MultiTableEngine:
     def flush_tx_carry(self, batch_id: str = "txflush") -> dict[str, int | None]:
         """Apply the deferred open-tail transaction (end of stream closes
         it). No-op if nothing is carried."""
-        from debezium_spark.streaming.engine import load_tx_carry, persist_tx_carry
-
-        c, self._tx_carry = self._tx_carry, None
-        self._carry_meta = None
-        if c is None:
-            c = load_tx_carry(self.spark, self.root)
+        c, _ = self._carry.take()
         if c is None:
             return {}
-        old = self.tx_aligned
-        self.tx_aligned = False
-        try:
-            out = self.apply_wire_batch(c, batch_id)
-        finally:
-            self.tx_aligned = old
+        out = self._dispatch(c, batch_id)
         if self.committer:
             self.committer.commit(force=True)  # end-of-stream terminal line
-        persist_tx_carry(self.spark, None, self.root)
+        self._carry.clear()
         return out
 
     def read_all(self) -> dict[str, DataFrame]:

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from debezium_spark import CdcEngine, LakeTable
@@ -289,7 +291,8 @@ def test_carry_meta_survives_restart(spark, tmp_path):
     table = LakeTable(spark, str(tmp_path / "t"), ["repo", "path"], n_buckets=2)
     CdcEngine(spark, table).replay(bdir, final=False)
     meta = load_tx_carry_meta(str(tmp_path / "t"))
-    assert meta == {"tx": "tx2", "p": 2, "nd": False, "nb": False}
+    assert meta == {"tx": "tx2", "p": 2, "f": "binlog.000001",
+                    "nd": False, "nb": False}
 
     # fresh engine (restart): batch1 closes tx2, opens tx3
     _write_batch(spark, bdir, 1, [
@@ -398,3 +401,189 @@ def test_multi_dispatch_probe_is_one_job_per_batch(spark, tmp_path):
     state = {r["k"]: r["v"] for r in mte.table("app", "t").read().collect()}
     # tx1+tx2 committed (tx2 closed by tx3's appearance); tx3 deferred
     assert state == {"a": "x", "b": "x", "b2": "x"}
+
+
+def _state(table):
+    return {r["path"]: r["content"] for r in table.read().collect()}
+
+
+class _CountJobs:
+    """Counts the driver probe actions (``.first()`` and ``.count()``) run
+    inside the block, on the concrete (classic) DataFrame class."""
+
+    def __init__(self, spark):
+        self.cls = type(spark.range(1))
+        self.n = 0
+
+    def __enter__(self):
+        self.orig = (self.cls.first, self.cls.count)
+        first, count = self.orig
+
+        def counting_first(df):
+            self.n += 1
+            return first(df)
+
+        def counting_count(df):
+            self.n += 1
+            return count(df)
+
+        self.cls.first, self.cls.count = counting_first, counting_count
+        return self
+
+    def __exit__(self, *exc):
+        self.cls.first, self.cls.count = self.orig
+
+
+def _carry_meta_dirs(root):
+    base = os.path.join(root, "_tx_carry")
+    return [os.path.join(base, v) for v in sorted(os.listdir(base))]
+
+
+def test_carry_without_meta_recomputes_it_on_restart(spark, tmp_path):
+    """A crash between the carry's parquet write and its meta rename leaves
+    no ``_carry_meta.json`` (or, from a non-atomic writer, an empty one). A
+    restarted engine recomputes the meta from the carry once — on the split
+    path and on the flush path — and lands on the clean replay's state."""
+    batches = [
+        [(1, "c", "a", "v1", "tx1"), (2, "c", "b", "v1", "tx2")],
+        [(3, "u", "b", "v2", "tx2"), (4, "c", "c", "v1", "tx3")],
+    ]
+    clean_dir = str(tmp_path / "clean_b")
+    os.makedirs(clean_dir)
+    for i, rows in enumerate(batches):
+        _write_batch(spark, clean_dir, i, rows)
+    clean = LakeTable(spark, str(tmp_path / "clean"), ["repo", "path"], n_buckets=2)
+    CdcEngine(spark, clean).replay(clean_dir)
+
+    root = str(tmp_path / "t")
+    table = LakeTable(spark, root, ["repo", "path"], n_buckets=2)
+
+    def restart():
+        return CdcEngine(spark, LakeTable(spark, root, ["repo", "path"]))
+
+    def meta_path():
+        (vdir,) = _carry_meta_dirs(root)
+        return os.path.join(vdir, "_carry_meta.json")
+
+    for i, rows in enumerate(batches):
+        bdir = str(tmp_path / f"b{i}")
+        os.makedirs(bdir)
+        _write_batch(spark, bdir, 0, rows)
+        if i:
+            open(meta_path(), "w").close()  # torn
+        restart().replay(bdir, final=False)
+    assert _state(table) == {"a": "v1", "b": "v2"}  # tx3 deferred
+    assert table.fence() == ("binlog.000001", 3)
+    os.remove(meta_path())
+    restart().flush_tx_carry()
+    assert _state(table) == _state(clean)
+    assert table.fence() == clean.fence()
+
+
+def test_stream_carry_then_replay_costs_one_probe_per_batch(spark, tmp_path):
+    """A carry deferred by ``apply_stream_batch`` is written with its meta,
+    so a fresh ``replay`` on the same root splits the carry-prefixed batch
+    with ONE probe job — the same as a replay-written carry."""
+    root = str(tmp_path / "t")
+    table = LakeTable(spark, root, ["repo", "path"], n_buckets=2)
+    CdcEngine(spark, table).apply_stream_batch(
+        _env(spark, [(1, "c", "a", "v1", "tx1"), (2, "c", "b", "v1", "tx1"),
+                     (3, "c", "c", "v1", "tx2")]),
+        "epoch-0",
+    )
+    assert _state(table) == {"a": "v1", "b": "v1"}  # tx2 deferred
+
+    bdir = str(tmp_path / "b")
+    os.makedirs(bdir)
+    _write_batch(spark, bdir, 0, [
+        (4, "u", "c", "v2", "tx2"), (5, "u", "a", "v2", "tx3"),
+    ])
+    engine = CdcEngine(spark, LakeTable(spark, root, ["repo", "path"]))
+    with _CountJobs(spark) as jobs:
+        engine.replay(bdir, final=False)
+    assert jobs.n == 1, f"expected 1 probe job, got {jobs.n}"
+    assert _state(table) == {"a": "v1", "b": "v1", "c": "v2"}  # tx3 deferred
+    assert table.fence() == ("binlog.000001", 4)
+
+
+def test_flush_takes_fence_and_flags_from_the_carry_meta(spark, tmp_path):
+    """``flush_tx_carry`` applies the deferred tail with zero probe jobs
+    (fence from the meta's ``f``/``p``, barrier and malformed-row flags from
+    ``nd``/``nb``) and lands on the one-shot replay's final state."""
+    bdir = str(tmp_path / "b")
+    os.makedirs(bdir)
+    _write_batch(spark, bdir, 0, [
+        (1, "c", "a", "v1", "tx1"), (2, "c", "b", "v1", "tx1"),
+        (3, "u", "a", "v2", "tx2"), (4, "c", "c", "v1", "tx2"),
+    ])
+    table = LakeTable(spark, str(tmp_path / "t"), ["repo", "path"], n_buckets=2)
+    engine = CdcEngine(spark, table)
+    engine.replay(bdir, final=False)
+    assert _state(table) == {"a": "v1", "b": "v1"}
+    with _CountJobs(spark) as jobs:
+        engine.flush_tx_carry()
+    assert jobs.n == 0, f"flush ran {jobs.n} probe jobs"
+    assert _state(table) == {"a": "v2", "b": "v1", "c": "v1"}
+    assert table.fence() == ("binlog.000001", 4)
+    assert not os.listdir(os.path.join(str(tmp_path / "t"), "_tx_carry"))
+
+
+#: one straddling-transaction input, batch by batch, with the state, fence
+#: and persisted carry meta every driver must show after each batch (tx2
+#: straddles all three batches; b1 is one still-open transaction)
+_DRIVER_STEPS = [
+    ([(1, "c", "a", "v1", "tx1"), (2, "c", "b", "v1", "tx1"),
+      (3, "c", "c", "v1", "tx2")],
+     {"a": "v1", "b": "v1"}, 2, {"tx": "tx2", "p": 3}),
+    ([(4, "u", "c", "v2", "tx2"), (5, "u", "a", "v2", "tx2")],
+     {"a": "v1", "b": "v1"}, 2, {"tx": "tx2", "p": 5}),
+    ([(6, "d", "b", None, "tx2"), (7, "c", "d", "v1", "tx3"),
+      (8, "u", "d", "v2", "tx3")],
+     {"a": "v2", "c": "v2"}, 6, {"tx": "tx3", "p": 8}),
+]
+
+
+@pytest.mark.parametrize("driver", ["replay", "stream", "multi"])
+def test_every_driver_carries_the_same_way(spark, tmp_path, driver):
+    """``replay``, ``apply_stream_batch`` epochs and the multi-table
+    dispatcher share one carry: after every batch and after the flush they
+    agree on rows, fence and the persisted meta (the wire form has no
+    single key, so its malformed-row flag ``nb`` is recorded as unknown)."""
+    from debezium_spark.streaming.engine import load_tx_carry_meta
+    from debezium_spark.streaming.multi import MultiTableEngine, TableSpec, envelope_to_wire
+    from pyspark.sql.types import StructType
+
+    if driver == "multi":
+        payload = StructType.fromDDL("repo string, path string, content string")
+        mte = MultiTableEngine(
+            spark, str(tmp_path / "lake"),
+            [TableSpec("app", "t", payload, ["repo", "path"], n_buckets=2)],
+            auto_register=False, max_parallel_tables=1,
+        )
+        root, table = mte.root, mte.table("app", "t")
+        step = lambda i, env: mte.apply_wire_batch(envelope_to_wire(env), f"b{i}")  # noqa: E731
+        flush = mte.flush_tx_carry
+    else:
+        root = str(tmp_path / "t")
+        table = LakeTable(spark, root, ["repo", "path"], n_buckets=2)
+        engine = CdcEngine(spark, table)
+        flush = engine.flush_tx_carry
+
+        def step(i, env):
+            if driver == "stream":
+                return engine.apply_stream_batch(env, f"epoch-{i}")
+            bdir = str(tmp_path / f"b{i}")
+            env.write.parquet(os.path.join(bdir, "batch_00000.parquet"))
+            return engine.replay(bdir, final=False)
+
+    for i, (rows, want, fence_pos, want_meta) in enumerate(_DRIVER_STEPS):
+        step(i, _env(spark, rows))
+        assert _state(table) == want, f"batch {i}"
+        assert table.fence() == ("binlog.000001", fence_pos), f"batch {i}"
+        meta = load_tx_carry_meta(root)
+        assert meta == {**want_meta, "f": "binlog.000001", "nd": False,
+                        "nb": driver == "multi"}, f"batch {i}"
+    flush()
+    assert _state(table) == {"a": "v2", "c": "v2", "d": "v2"}
+    assert table.fence() == ("binlog.000001", 8)
+    assert load_tx_carry_meta(root) is None

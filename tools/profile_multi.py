@@ -7,6 +7,7 @@ Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/profile_multi.py [--
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -15,10 +16,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-REPEAT = int(sys.argv[sys.argv.index("--repeat") + 1]) if "--repeat" in sys.argv else 2
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("--repeat", type=int, default=2, help="profiled repetitions")
+    repeat = ap.parse_args().repeat
+
     from bench import make_spark
     import __spark_entry__ as em
     from pyspark.sql import functions as F
@@ -28,7 +34,7 @@ def main() -> None:
     spark = make_spark(CPUS, "profile-multi")
     spark.sparkContext.setLogLevel("ERROR")
 
-    for rep in range(REPEAT):
+    for rep in range(repeat):
         t_all = time.perf_counter()
         marks: list[tuple[str, float]] = []
 
